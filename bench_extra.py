@@ -8,8 +8,8 @@ Usage:
     python3 bench_extra.py explain dd3_minhash_lsh > plans/r08/dd3_before.txt
     python3 bench_extra.py explain-all-headline plans/r08 _before
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 here — the
-driver's measured scale), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 reference tables, as in
+bench.py), SPARK_GRAFT_CPUS (default: the cores this process may run on).
 """
 
 from __future__ import annotations
@@ -20,29 +20,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "a2_best_match",
-    "a3_eval_report",
-    "w1_event_rank",
-    "w6_sessionize",
-    "dd1_exact",
-    "dd3_minhash_lsh",
-    "dd4_simhash",
-    "dd5_embedding_dup",
-    "sim1_topk_cosine",
-    "sim2_lsh_buckets",
-    "ta2_quality_score",
-    "ev1_hourly_rollup",
-]
+from __spark_entry__ import SF0001  # noqa: E402
+from bench import HEADLINE  # noqa: E402  (one list, owned by bench.py)
+
+# bench.py's default scale, beside the driver contract's sf0.001 tables
+SF_DIR_DEFAULT = os.path.join(os.path.dirname(SF0001), "sf0.1")
 
 
 def _session():
     from ocr_document_recognition_service_spark.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     spark = build_session(app_name="bench_extra", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -55,7 +45,7 @@ def _noop(df) -> float:
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR_DEFAULT)
     cmd = sys.argv[1]
     from ocr_document_recognition_service_spark.plans import queries as Q
 

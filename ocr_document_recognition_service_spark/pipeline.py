@@ -1,21 +1,30 @@
 """The Spark extraction pipeline (SURVEY §7.1 steps 4–5).
 
-Plan shape (all relational work stays in Catalyst; Python only inside
-Arrow-batched pandas UDFs):
+Plan shape of ``extract_pages`` (all relational work stays in Catalyst;
+Python only inside Arrow-batched pandas UDFs):
 
-    scan pages
-      → repartition(P, xxhash64(url))                 [one shuffle]
-      → skew pre-pass: length(html) > threshold rows split at block
-        boundaries into chunk rows (salt-split, W2 semantics)
-      → THREE lang-filtered branches (en/ru/kk) + a null-lang branch,
-        each applying the vectorized extraction UDF with the branch's
-        normalization constants — DataFrame-level routing, no UDF
-        conditional on lang (north rule)
-      → unionByName
-      → drop html immediately (column pruning past extraction)
-      → salted rows reassembled: groupBy(url), texts joined in
-        chunk_id order                                [shuffle only
-        over the tiny salted subset]
+    scan pages (no pre-extraction shuffle: scan splits are already
+    even, and moving every html blob through a shuffle costs more
+    than the skew it would fix)
+      → FOUR lang-filtered branches (en/ru/kk + null/unknown lang),
+        each a filter on the scan — on a table written
+        partitionBy("lang") the filter prunes at scan, so each branch
+        reads only its own files.  Each branch applies the vectorized
+        extraction UDF with its language's normalization constants:
+        DataFrame-level routing, no UDF conditional on lang (north rule)
+      → inside the known-lang UDFs, an html row longer than the salt
+        threshold takes the salted kernel (split at scope-safe block
+        boundaries, extract per chunk, rejoin — byte-identical to the
+        unsplit kernel) in the same task, with no extra pass
+      → unionByName of the branches; html is dropped right after the
+        UDF (column pruning past extraction)
+
+The url-hash clustering the lineage contract needs is NOT part of this
+plan: ``lineage.run_extraction`` repartitions the narrow extracted
+output by ``pid = pmod(xxhash64(url), P)`` just before its partitioned
+write, where the shuffled bytes are ~10× smaller than the html.
+``pre_repartition=True`` and ``distribute_salted=True`` are opt-in
+shapes for pathological inputs (see ``extract_pages``).
 
 The per-stage list materialization of the reference
 (``core/pipelines/default/preprocessor.py:9`` etc.) and its
@@ -92,6 +101,11 @@ def _extract_udf(
     @pandas_udf(EXTRACT_RESULT_TYPE)
     def extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         from ocr_document_recognition_service_spark import extract_one
+        from ocr_document_recognition_service_spark.pydeps import (
+            keep_zip_directories,
+        )
+
+        keep_zip_directories()
 
         cap = (
             max_payload_bytes
@@ -131,6 +145,11 @@ def _split_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     module constant so the UDF stays single-column; PDF / non-UTF-8
     payloads come back as a single chunk — the kernel refuses)."""
     from ocr_document_recognition_service_spark import extract_one
+    from ocr_document_recognition_service_spark.pydeps import (
+        keep_zip_directories,
+    )
+
+    keep_zip_directories()
 
     for payloads in batches:
         yield payloads.map(

@@ -694,6 +694,11 @@ def pages_from_file_listing(
             iter_warc_range,
             iter_warc_records,
         )
+        from ocr_document_recognition_service_spark.pydeps import (
+            keep_zip_directories,
+        )
+
+        keep_zip_directories()
 
         cols = ["url", "warc_ts", "html", "text", "lang"]
         rows: list[tuple] = []
@@ -756,6 +761,11 @@ def read_warc(
             _HOST_LANG_RE,
             parse_warc_bytes,
         )
+        from ocr_document_recognition_service_spark.pydeps import (
+            keep_zip_directories,
+        )
+
+        keep_zip_directories()
 
         for pdf in batches:
             rows = []
